@@ -36,6 +36,7 @@ from kaj_query_engine_spark.functions.text import (
     shingles_of_tokens,
     tokens,
 )
+from kaj_query_engine_spark.operators.skew import spread_by_id
 
 
 def _auto_broadcast_bytes(spark) -> int:
@@ -105,29 +106,15 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Exploded (id, shingle) pairs, distinct per doc.
 
-    The input is repartitioned by id first: documents are a
-    small-input / large-compute shape (the explode multiplies rows
-    10–50×), so spreading BEFORE the explode keeps every core busy and
-    shuffles raw docs instead of shingles — and the downstream
-    ``groupBy(id)`` reuses the hash partitioning, so no second
-    exchange of the exploded data. The partition count is pinned to
-    max(cluster parallelism, input file count): AQE would otherwise
-    coalesce the tiny-bytes shuffle to one partition and serialize
-    the compute, while the file-count floor keeps a 100 TB corpus
-    (far more splits than cores) from being squeezed DOWN to core
-    count and ballooning per-task explode output. ``inputFiles()`` is
-    a file-index listing — cheap, and unlike ``df.rdd`` it neither
-    materializes the physical plan nor reports the shuffle-partition
-    count (200 on a vanilla session) for post-shuffle inputs.
+    The input is spread by id first (:func:`spread_by_id`):
+    documents are a small-input / large-compute shape (the explode
+    multiplies rows 10–50×), so spreading BEFORE the explode keeps
+    every core busy and shuffles raw docs instead of shingles — and
+    the downstream ``groupBy(id)`` reuses the hash partitioning, so no
+    second exchange of the exploded data.
     """
-    sc = df.sparkSession.sparkContext
-    try:
-        n_input = len(df.inputFiles())
-    except Exception:
-        n_input = 0
-    n_parts = max(sc.defaultParallelism, n_input)
     return (
-        df.repartition(n_parts, F.col(id_col))
+        spread_by_id(df, id_col)
         # tokens materialize as a column BEFORE the shingle lambda:
         # higher-order transforms run interpreted, so an inlined split
         # would re-run once per gram (~10x on 50-token docs)
@@ -823,6 +810,14 @@ def verify_candidate_pairs(
     )
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind a ``localCheckpoint(eager=True)`` frame
+    now, instead of whenever the ContextCleaner collects its RDD. The
+    frame cannot be read afterwards, but frames checkpointed FROM it
+    can: an eager checkpoint cuts their lineage."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def cluster_duplicates(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     """Connected components over candidate-pair edges → (id, cluster)
     with cluster = min id reachable — the step that turns near-dup
@@ -837,41 +832,54 @@ def cluster_duplicates(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     Dup clusters are near-cliques (1–2 rounds) but one boilerplate
     CHAIN of near-dups would otherwise cost diameter shuffles at
     100 TB. Each round is two shuffles; the driver-side loop only
-    checks a count — no data is collected.
+    checks a number — no data is collected.
 
-    Per-round cost is TWO Spark jobs (this dominates wall clock when
-    components are small and rounds are pure overhead, and bounds
-    scheduler pressure at 100 TB):
+    The edge list is symmetrized from ONE reference to ``pairs`` (an
+    explode of both orientations) and materialized once behind a
+    ``localCheckpoint``: ``pairs`` is usually a deep plan (MinHash,
+    LSH, exact verification), and every round reads the edges. A
+    ``persist()`` would do the same job but hides the plan below it
+    from exchange reuse, so every exchange the caller's plan repeats
+    would run once per repeat.
 
-    - one action materializes the round's labels behind a
-      ``localCheckpoint`` (the checkpoint bounds lineage — each
-      round's plan starts from the previous round's materialized
-      leaf, so Catalyst analysis stays O(1) per round instead of
-      going exponential by round ~8). The mid-round propagate frame
-      is NOT checkpointed: the pointer-doubling self-join reads it
-      twice, which merely duplicates one cheap in-job join subtree
-      while keeping the job count down;
-    - one 1-row aggregate implements the convergence test. Labels
-      are non-increasing per node (every update is ``least(old,
-      ...)``), so the label SUM strictly decreases until fixpoint
-      and "sum unchanged" ⟺ "no node changed" — an O(1)-output
-      map-side-partial agg instead of the previous
-      join-labels-to-labels changed-row count. DECIMAL(38,0)
-      accumulation keeps the sum exact for ~1e12 nodes with 1e12-
-      sized ids (int64 would overflow at that scale and a silently
-      wrapped sum could fake convergence). The sum witness applies
-      only to exact-numeric id types; string/other ids fall back to
-      the join-based changed count (one extra job per round) rather
-      than trust a lossy cast.
+    Per-round cost is ONE Spark action, which materializes the
+    round's labels behind a ``localCheckpoint`` (the checkpoint
+    bounds lineage — each round's plan starts from the previous
+    round's materialized leaf, so Catalyst analysis stays O(1) per
+    round instead of going exponential by round ~8). The mid-round
+    propagate frame is NOT checkpointed: the pointer-doubling
+    self-join reads it twice, which merely duplicates one cheap
+    in-job join subtree while keeping the job count down.
+
+    The convergence test rides on that action as an
+    ``Observation``: labels are non-increasing per node (every update
+    is ``least(old, ...)``), so the label SUM strictly decreases until
+    fixpoint and "sum unchanged" ⟺ "no node changed". The sum is
+    observed at the top of the checkpoint job, in its result stage,
+    so a retried map stage cannot count twice. DECIMAL(38,0)
+    accumulation keeps the sum exact for ~1e12 nodes with 1e12-sized
+    ids (int64 would overflow at that scale and a silently wrapped
+    sum could fake convergence). The sum witness applies only to
+    exact-numeric id types; string/other ids fall back to the
+    join-based changed count (one extra job per round) rather than
+    trust a lossy cast.
+
+    Each round's checkpoint is released once the next one exists,
+    and the edges when the loop ends; the caller owns the returned
+    checkpoint (:func:`release_checkpoint`). A ``localCheckpoint``
+    lives on the executors' block managers: losing an executor loses
+    its blocks, and a later read fails instead of recomputing.
     """
-    edges = pairs.select(
-        F.col("d1").alias("a"), F.col("d2").alias("b")
-    ).unionByName(pairs.select(F.col("d2").alias("a"), F.col("d1").alias("b")))
-    edges = edges.persist()
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("cluster", F.col("id"))
+    edges = (
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("d1").alias("a"), F.col("d2").alias("b")),
+                    F.struct(F.col("d2").alias("a"), F.col("d1").alias("b")),
+                )
+            ).alias("e")
+        )
+        .select("e.a", "e.b")
         .localCheckpoint(eager=True)
     )
 
@@ -881,6 +889,7 @@ def cluster_duplicates(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     # doc ids are legitimate here — min() is lexicographic) fall back
     # to the join-based changed-row count: one extra job per round,
     # never a silent wrong answer from a lossy cast.
+    from pyspark.sql import Observation
     from pyspark.sql import types as _T
 
     id_type = edges.schema["a"].dataType
@@ -889,10 +898,15 @@ def cluster_duplicates(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
         (_T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType, _T.DecimalType),
     )
 
-    def label_sum(df: DataFrame):
-        return df.agg(
-            F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s")
-        ).collect()[0].s
+    def checkpoint(df: DataFrame):
+        """(checkpointed df, its label sum — None for non-numeric ids)"""
+        if not numeric_ids:
+            return df.localCheckpoint(eager=True), None
+        obs = Observation()
+        df = df.observe(
+            obs, F.sum(F.col("cluster").cast("decimal(38,0)")).alias("s")
+        ).localCheckpoint(eager=True)
+        return df, obs.get["s"]
 
     def changed_rows(new: DataFrame, old: DataFrame) -> int:
         return (
@@ -902,55 +916,55 @@ def cluster_duplicates(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
             .count()
         )
 
-    prev_sum = label_sum(labels) if numeric_ids else None
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.id)
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("cluster").alias("nbr_min"))
+    try:
+        labels, prev_sum = checkpoint(
+            edges.select(F.col("a").alias("id"))
+            .distinct()
+            .withColumn("cluster", F.col("id"))
         )
-        propagated = labels.join(neighbor_min, "id", "left").select(
-            "id",
-            F.least(
-                F.col("cluster"), F.coalesce("nbr_min", F.col("cluster"))
-            ).alias("cluster"),
-        )
-        # pointer doubling: cluster := cluster(cluster). Labels are
-        # node ids, so the lookup is a self-join; a chain's labels
-        # halve their distance to the component min every round.
-        jump = propagated.select(
-            F.col("id").alias("jid"), F.col("cluster").alias("jcluster")
-        )
-        new_labels = (
-            propagated.join(jump, propagated.cluster == jump.jid, "left")
-            .select(
+        for _ in range(max_iters):
+            neighbor_min = (
+                edges.join(labels, edges.b == labels.id)
+                .groupBy(F.col("a").alias("id"))
+                .agg(F.min("cluster").alias("nbr_min"))
+            )
+            propagated = labels.join(neighbor_min, "id", "left").select(
                 "id",
                 F.least(
-                    F.col("cluster"), F.coalesce("jcluster", F.col("cluster"))
+                    F.col("cluster"), F.coalesce("nbr_min", F.col("cluster"))
                 ).alias("cluster"),
             )
-            .localCheckpoint(eager=True)
-        )
-        if numeric_ids:
-            new_sum = label_sum(new_labels)
-            converged = new_sum == prev_sum
-            prev_sum = new_sum
-        else:
-            converged = changed_rows(new_labels, labels) == 0
-        labels = new_labels
-        if converged:
-            break
-    else:
-        edges.unpersist()
+            # pointer doubling: cluster := cluster(cluster). Labels are
+            # node ids, so the lookup is a self-join; a chain's labels
+            # halve their distance to the component min every round.
+            jump = propagated.select(
+                F.col("id").alias("jid"), F.col("cluster").alias("jcluster")
+            )
+            new_labels, new_sum = checkpoint(
+                propagated.join(jump, propagated.cluster == jump.jid, "left")
+                .select(
+                    "id",
+                    F.least(
+                        F.col("cluster"), F.coalesce("jcluster", F.col("cluster"))
+                    ).alias("cluster"),
+                )
+            )
+            if numeric_ids:
+                converged = new_sum == prev_sum
+                prev_sum = new_sum
+            else:
+                converged = changed_rows(new_labels, labels) == 0
+            release_checkpoint(labels)
+            labels = new_labels
+            if converged:
+                return labels
+        release_checkpoint(labels)
         raise RuntimeError(
             f"cluster_duplicates did not converge in {max_iters} rounds "
             "(component diameter exceeds max_iters) — raise max_iters"
         )
-    edges.unpersist()
-    # labels is already a checkpointed leaf — self-contained, no
-    # lineage back into the loop; intermediate checkpoint RDDs are
-    # released by the ContextCleaner once unreferenced
-    return labels
+    finally:
+        release_checkpoint(edges)
 
 
 def simhash_fingerprints(
@@ -963,8 +977,7 @@ def simhash_fingerprints(
     One explode + one groupBy(id) with `bits` sum-aggregates.
     """
     assert bits <= 32  # md5 hex has 32 nibbles
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    tok = df.repartition(n_parts, F.col(id_col)).select(
+    tok = spread_by_id(df, id_col).select(
         F.col(id_col).alias("id"),
         F.explode(
             F.array_distinct(F.split(F.trim(F.col(text_col)), " "))
@@ -1029,14 +1042,8 @@ def duplicated_spans(
 
     from kaj_query_engine_spark.functions.text import tokens
 
-    sc = df.sparkSession.sparkContext
-    try:
-        n_input = len(df.inputFiles())
-    except Exception:
-        n_input = 0
-    n_parts = max(sc.defaultParallelism, n_input)
     toks = (
-        df.repartition(n_parts, F.col(id_col))
+        spread_by_id(df, id_col)
         .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("t"))
         .filter(F.size("t") >= k)
     )

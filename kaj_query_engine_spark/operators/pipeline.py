@@ -30,8 +30,10 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from kaj_query_engine_spark.operators.skew import spread_by_id
 
 SAMPLE_SCALE = 1_000_000  # rate resolution: 1e-6
 
@@ -287,95 +289,109 @@ def build_training_corpus(
         cluster_duplicates,
         exact_duplicates,
         minhash_lsh_candidates,
+        release_checkpoint,
         verify_candidate_pairs,
     )
     from kaj_query_engine_spark.sources.export import write_training_shards
 
-    funnel = [("raw", docs.count())]
-
-    # each surviving stage is persisted before its funnel count: the
-    # count is an action, and every later stage re-reads the frame —
-    # without the persist the quality gate alone would re-execute once
-    # per downstream stage (scan + tokenize + filter, ~6x total)
-    cached = []
+    n_rows = F.count(F.lit(1)).alias("n")
+    funnel: list[tuple[str, int]] = []
+    # each surviving stage is materialized once, behind a
+    # localCheckpoint, and its funnel count is an Observation on that
+    # same job: every later stage re-reads the frame, so without it
+    # the quality gate alone would re-execute once per downstream
+    # stage. The observe sits at the top of the checkpoint job (its
+    # result stage), so a retried map stage cannot count twice. A
+    # checkpoint, unlike persist(), leaves the plans above it open to
+    # exchange reuse, which the near-dedup stage needs: its plan
+    # reads the candidate pairs through several paths.
+    checkpoints: list[DataFrame] = []
 
     def stage(name: str, df: DataFrame) -> DataFrame:
-        df = df.persist()
-        cached.append(df)
-        funnel.append((name, df.count()))
+        obs = Observation()
+        df = df.observe(obs, n_rows).localCheckpoint(eager=True)
+        checkpoints.append(df)
+        funnel.append((name, obs.get["n"]))
         return df
 
-    gated = stage(
-        "quality_gate",
-        docs.select(id_col, text_col, tokens(F.col(text_col)).alias("_toks"))
-        .filter(gopher_ok_of(F.col("_toks")))
-        .drop("_toks"),
-    )
-
-    keep_exact = exact_duplicates(gated, id_col, text_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    exact = stage("exact_dedup", gated.join(keep_exact, id_col, "semi"))
-
-    # candidates are VERIFIED with exact n-gram Jaccard before
-    # clustering (the ingest_batch convention): a raw band collision
-    # between genuinely-dissimilar docs would otherwise chain two
-    # components together and permanently delete a non-duplicate
-    cand = minhash_lsh_candidates(exact, id_col, text_col)
-    pairs = verify_candidate_pairs(
-        exact, cand, id_col, text_col, threshold=jaccard_threshold
-    )
-    # cluster representatives: min id per component; docs in no pair
-    # are their own singleton cluster and survive untouched
-    losers = (
-        cluster_duplicates(pairs)
-        .filter(F.col("id") != F.col("cluster"))
-        .select(F.col("id").alias(id_col))
-    )
-    neared = stage("near_dedup", exact.join(losers, id_col, "left_anti"))
-
-    if benchmarks is not None:
-        # decontaminate emits ONLY docs with >= 1 shared n-gram (its
-        # output id column is named 'id'); drop every one of them
-        flagged = decontaminate(neared, benchmarks, id_col, text_col)
-        clean = neared.join(
-            flagged.select(F.col("id").alias(id_col)), id_col, "left_anti"
+    try:
+        raw = Observation()
+        gated = stage(
+            "quality_gate",
+            docs.observe(raw, n_rows)
+            .select(id_col, text_col, tokens(F.col(text_col)).alias("_toks"))
+            .filter(gopher_ok_of(F.col("_toks")))
+            .drop("_toks"),
         )
-    else:
-        clean = neared
-    clean = stage("decontaminated", clean)
+        funnel.insert(0, ("raw", raw.get["n"]))
 
-    if dsir_target is not None and dsir_k is not None:
-        picked = dsir_importance_resample(
-            clean, dsir_target, id_col, text_col, k=dsir_k
-        ).select(F.col("id").alias(id_col))
-        clean = stage(
-            "dsir_matched", clean.join(F.broadcast(picked), id_col, "semi")
+        keep_exact = exact_duplicates(gated, id_col, text_col).select(
+            F.col("keep_id").alias(id_col)
         )
+        exact = stage("exact_dedup", gated.join(keep_exact, id_col, "semi"))
 
-    # text RIDES THROUGH packing (pack_sequences only adds shard/
-    # offset/chunk metadata columns) — the exported shards must hold
-    # the training content, not just its packing coordinates
-    with_counts = clean.select(
-        id_col, text_col, F.size(tokens(F.col(text_col))).alias("_n_tok")
-    )
-    packed = pack_sequences(
-        with_counts, id_col, "_n_tok", max_tokens, num_shards
-    )
-    manifest = write_training_shards(
-        packed,
-        out_path,
-        max_records_per_file,
-        shard_key="shard",  # co-locate each packing shard's chunks
-        n_shards=num_shards,
-        token_col="_n_tok",
-    )
-    # chunk count from the manifest (a tiny read of already-written
-    # parquet), not a seventh re-execution of the whole pipeline
-    n_packed = manifest.agg(F.sum("n_rows")).collect()[0][0] or 0
-    funnel.append(("packed_chunks", int(n_packed)))
-    for df in cached:
-        df.unpersist()
+        # candidates are VERIFIED with exact n-gram Jaccard before
+        # clustering (the ingest_batch convention): a raw band collision
+        # between genuinely-dissimilar docs would otherwise chain two
+        # components together and permanently delete a non-duplicate
+        cand = minhash_lsh_candidates(exact, id_col, text_col)
+        pairs = verify_candidate_pairs(
+            exact, cand, id_col, text_col, threshold=jaccard_threshold
+        )
+        # cluster representatives: min id per component; docs in no
+        # pair are their own singleton cluster and survive untouched
+        clusters = cluster_duplicates(pairs)
+        checkpoints.append(clusters)
+        losers = clusters.filter(F.col("id") != F.col("cluster")).select(
+            F.col("id").alias(id_col)
+        )
+        neared = stage("near_dedup", exact.join(losers, id_col, "left_anti"))
+
+        if benchmarks is not None:
+            # decontaminate emits ONLY docs with >= 1 shared n-gram (its
+            # output id column is named 'id'); drop every one of them
+            flagged = decontaminate(neared, benchmarks, id_col, text_col)
+            clean = neared.join(
+                flagged.select(F.col("id").alias(id_col)), id_col, "left_anti"
+            )
+        else:
+            clean = neared
+        clean = stage("decontaminated", clean)
+
+        if dsir_target is not None and dsir_k is not None:
+            picked = dsir_importance_resample(
+                clean, dsir_target, id_col, text_col, k=dsir_k
+            ).select(F.col("id").alias(id_col))
+            clean = stage(
+                "dsir_matched", clean.join(F.broadcast(picked), id_col, "semi")
+            )
+
+        # text RIDES THROUGH packing (pack_sequences only adds shard/
+        # offset/chunk metadata columns) — the exported shards must hold
+        # the training content, not just its packing coordinates
+        with_counts = clean.select(
+            id_col, text_col, F.size(tokens(F.col(text_col))).alias("_n_tok")
+        )
+        packed = pack_sequences(
+            with_counts, id_col, "_n_tok", max_tokens, num_shards
+        )
+        manifest = write_training_shards(
+            packed,
+            out_path,
+            max_records_per_file,
+            shard_key="shard",  # co-locate each packing shard's chunks
+            n_shards=num_shards,
+            token_col="_n_tok",
+        )
+        # chunk count from the manifest (a tiny read of already-written
+        # parquet), not another re-execution of the whole pipeline
+        n_packed = manifest.agg(F.sum("n_rows")).collect()[0][0] or 0
+        funnel.append(("packed_chunks", int(n_packed)))
+    finally:
+        # the manifest reads the written shards, so nothing returned
+        # depends on the checkpoints
+        for df in checkpoints:
+            release_checkpoint(df)
     return manifest, funnel
 
 
@@ -634,28 +650,6 @@ def _gram_bucket(g: Column, n_buckets: int) -> Column:
     return F.pmod(h, F.lit(n_buckets))
 
 
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Deliberate hash exchange before the md5-per-gram compute — the
-    q40/q93 small-input/large-compute pattern: a fixture-sized parquet
-    arrives as a SINGLE scan partition, which would serialize the
-    hashing onto one core. CONDITIONAL (round 14): it fires only when
-    the source file count is below cluster parallelism — at 100 TB
-    the scan has thousands of files and an unconditional repartition
-    would shuffle the corpus text for nothing (results never depend
-    on it: counts and per-row folds are partitioning-invariant).
-    ``inputFiles()`` is the probe because it only walks the logical
-    plan (~40 ms); ``df.rdd.getNumPartitions()`` forces an extra full
-    physical-plan compile per call (measured +0.6 s warm on q43's
-    DSIR frames). File count undercounts split parallelism for
-    few-huge-file layouts — the false-fire there costs one exchange a
-    map-heavy pass can absorb, the miss at fixture scale would
-    serialize the whole compute on one core."""
-    sc = df.sparkSession.sparkContext
-    if len(df.inputFiles()) >= sc.defaultParallelism:
-        return df
-    return df.repartition(F.col(id_col))
-
-
 def dsir_bucket_counts(
     df: DataFrame, id_col: str, text_col: str, n_buckets: int = 256
 ) -> dict[int, int]:
@@ -669,7 +663,7 @@ def dsir_bucket_counts(
     # expression (the array round-trips through an UnsafeRow), and
     # keeping one select keeps the md5 compute in the post-exchange
     # stage
-    g = _spread(df, id_col).select(
+    g = spread_by_id(df, id_col).select(
         F.explode(_grams_expr(text_col)).alias("g")
     )
     b = _gram_bucket(F.col("g"), n_buckets)
@@ -694,7 +688,7 @@ def dsir_split_counts(
     columns): one explode, one partial agg keyed (side, bucket), one
     bounded pull. Exactly equal to two :func:`dsir_bucket_counts`
     calls over the filtered frames, at half the scans (pinned)."""
-    g = _spread(df, id_col).select(
+    g = spread_by_id(df, id_col).select(
         is_target.alias("_t"),
         F.explode(_grams_expr(text_col)).alias("g"),
     )
@@ -793,10 +787,10 @@ def dsir_importance_resample(
     # a single Literal is one node, one lookup
     l_lit = F.lit([int(v) for v in lrt]).cast("array<long>")
     # same deliberate spread before the md5-per-gram scoring fold —
-    # a single-partition fixture scan would serialize it (see _spread);
+    # a single-partition fixture scan would serialize it (see spread_by_id);
     # the fold consumes the gram EXPRESSION inline for the same
     # no-UnsafeRow-round-trip reason as the counts path
-    scored = _spread(corpus, id_col).select(
+    scored = spread_by_id(corpus, id_col).select(
         F.col(id_col).alias("id"),
         F.aggregate(
             _grams_expr(text_col),
@@ -875,7 +869,7 @@ def lm_bigram_counts(
             F.lit("b").alias("k"), F.concat_ws(" ", a, b).alias("s")
         ),
     )
-    g = _spread(lm_corpus, id_col).select(
+    g = spread_by_id(lm_corpus, id_col).select(
         F.explode(F.concat(uni, big)).alias("e")
     )
     cu: dict[int, int] = {}

@@ -82,3 +82,24 @@ def salted_join(
     )
     out = salted_left.join(replicated_right, [key, "_salt"], how)
     return out.drop("_salt")
+
+
+def spread_by_id(df: DataFrame, id_col: str) -> DataFrame:
+    """Hash-repartition ``df`` by ``id_col`` into max(cluster
+    parallelism, input file count) partitions, before a per-row
+    compute that dwarfs the scan (tokenize, shingle, md5 per gram).
+
+    A fixture-sized parquet file arrives as ONE scan split and would
+    serialize that compute on one core. The count is pinned: a bare
+    ``repartition(col)`` leaves the choice to AQE, which coalesces a
+    tiny-bytes shuffle back to one partition. The file-count floor
+    keeps a 100 TB corpus (far more splits than cores) from being
+    squeezed DOWN to core count and ballooning per-task output.
+    ``inputFiles()`` only walks the logical plan; ``df.rdd`` would
+    compile the physical plan and, for a post-shuffle input, report
+    the shuffle-partition setting instead. Results never depend on
+    the spread: every caller's output is partitioning-invariant.
+    """
+    sc = df.sparkSession.sparkContext
+    n_parts = max(sc.defaultParallelism, len(df.inputFiles()))
+    return df.repartition(n_parts, F.col(id_col))

@@ -161,12 +161,12 @@ def q40(spark, sf_dir):
     # the per-row regex+lambda work dwarfs the scan, and a few-MB
     # parquet file arrives as ONE split, serializing all of it on a
     # single core — spread over cluster parallelism first. CONDITIONAL
-    # since round 14 (the operators/pipeline._spread rule): when the
-    # source file count is already cluster-wide — the 100 TB case —
+    # since round 14: when the source file count is already
+    # cluster-wide — the 100 TB case —
     # the repartition would shuffle the corpus text for nothing, so it
     # is skipped; the per-doc profile is partitioning-invariant.
     # inputFiles() probes the logical plan only — df.rdd would force
-    # an extra physical-plan compile (see pipeline._spread)
+    # an extra physical-plan compile (see operators.skew.spread_by_id)
     n_parts = spark.sparkContext.defaultParallelism
     txt = F.col("text")
     spread = (

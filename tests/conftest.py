@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import random
+import uuid
 
 import pytest
 
@@ -19,6 +20,20 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     spark = get_spark("kaj-tests", master="local[4]", shuffle_partitions=4)
     yield spark
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran): the jobs are tagged with a
+    fresh job group and counted through the status tracker."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rand_rows(seed: int, spec, n: int):

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from kaj_query_engine_spark.operators import dedup as D
 from kaj_query_engine_spark.operators import similarity as S
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 
 @pytest.fixture()
@@ -425,8 +425,15 @@ def test_cluster_duplicates_chain_and_islands(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "d1 long, d2 long"
     )
-    out = {r.id: r.cluster for r in D.cluster_duplicates(pairs).collect()}
+    out, jobs = count_jobs(
+        spark,
+        lambda: {r.id: r.cluster for r in D.cluster_duplicates(pairs).collect()},
+    )
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    # three rounds of 8 jobs, plus the edge and initial-label
+    # checkpoints and the collect: 28. A separate label-sum job per
+    # round (and one for the initial labels) would make it 32 or more.
+    assert jobs <= 30, jobs
 
 
 def test_cluster_duplicates_long_chain_converges_logarithmically(spark):

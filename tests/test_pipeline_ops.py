@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kaj_query_engine_spark.operators import pipeline as P
+from tests.conftest import count_jobs
 
 
 def _docs(spark, n=200):
@@ -100,10 +101,17 @@ def test_build_training_corpus_funnel(spark, tmp_path):
         "doc_id long, text string",
     )
     out = str(tmp_path / "corpus")
-    manifest, funnel = build_training_corpus(
-        docs, "doc_id", "text", out, benchmarks=bench,
-        max_tokens=64, num_shards=2, max_records_per_file=50,
+    (manifest, funnel), jobs = count_jobs(
+        spark,
+        lambda: build_training_corpus(
+            docs, "doc_id", "text", out, benchmarks=bench,
+            max_tokens=64, num_shards=2, max_records_per_file=50,
+        ),
     )
+    # 50 jobs: every funnel count rides on a stage's checkpoint job,
+    # and the near-dedup plan computes MinHash-LSH once. Persisted
+    # stages with a count() each took 101.
+    assert jobs <= 60, jobs
     stages = dict(funnel)
     assert stages["raw"] == 10
     assert stages["quality_gate"] == 9          # doc 20 dropped
@@ -120,6 +128,48 @@ def test_build_training_corpus_funnel(spark, tmp_path):
     # the shards carry the TRAINING CONTENT, not just packing metadata
     assert "text" in back.columns
     assert back.filter(F.col("text").isNull() | (F.length("text") == 0)).count() == 0
+
+
+def test_build_training_corpus_releases_its_checkpoints(spark, tmp_path):
+    from kaj_query_engine_spark.operators.pipeline import (
+        build_training_corpus,
+    )
+
+    text = " ".join(f"w{i}" for i in range(60))
+    docs = spark.createDataFrame(
+        [(i, f"{text} d{i}") for i in range(4)], "doc_id long, text string"
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persistent())
+    for i in range(2):
+        build_training_corpus(
+            docs, "doc_id", "text", str(tmp_path / f"c{i}"), num_shards=2
+        )
+    assert len(persistent()) <= before
+
+
+def _exchange_reused(src) -> bool:
+    agg = src.groupBy("k").agg(F.sum("v").alias("s"))
+    both = agg.union(agg)
+    both.collect()
+    return "ReusedExchange" in str(both._jdf.queryExecution().executedPlan())
+
+
+def test_exchange_reuse_survives_checkpoint_not_persist(spark):
+    """The Spark behaviour build_training_corpus and cluster_duplicates
+    rely on: an exchange read twice in one plan runs once when its
+    input is a localCheckpoint, but twice when its input is persisted.
+    If a Spark upgrade flips either answer, the choice of checkpoint
+    over persist() there needs a fresh look."""
+    rows = [(i % 7, i) for i in range(100)]
+    df = spark.createDataFrame(rows, "k long, v long")
+    cached = df.persist()
+    try:
+        cached.count()
+        assert not _exchange_reused(cached)
+    finally:
+        cached.unpersist()
+    assert _exchange_reused(df.localCheckpoint(eager=True))
 
 
 def test_decontaminate_flags_overlap_and_scores(spark):

@@ -26,6 +26,9 @@ python tools/explain_audit.py
 echo "== pytest =="
 python -m pytest tests/ -q
 
+echo "== perfbench correctness (all four workloads, smoke size) =="
+python3 perfbench/run.py --smoke
+
 echo "== bench (sf0.1) =="
 python bench.py
 
