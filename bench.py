@@ -110,17 +110,19 @@ def canary_decide(
     }
 
 
-def _cpu_counters() -> tuple[int, int] | None:
+def _cpu_counters(path: str = "/proc/stat") -> tuple[int, int] | None:
     """(steal_jiffies, total_jiffies) from /proc/stat, or None where
     unreadable (non-Linux) — round-15 instrumentation: the r14 windows
     burned three resumes proving co-tenant noise was hypervisor CPU
     steal (vmstat-traced 8-11%); recording the run's own steal%
-    settles that question per-record instead of per-investigation."""
+    settles that question per-record instead of per-investigation.
+    The total is user..steal: the kernel already counts guest and
+    guest_nice inside user and nice, so they are not added again."""
     try:
-        with open("/proc/stat") as fh:
+        with open(path) as fh:
             parts = fh.readline().split()
         vals = [int(x) for x in parts[1:]]
-        return vals[7] if len(vals) > 7 else 0, sum(vals)
+        return vals[7] if len(vals) > 7 else 0, sum(vals[:8])
     except (OSError, ValueError, IndexError):
         return None
 

@@ -15,9 +15,25 @@ SPJ engine, see /root/reference) on top of Apache Spark:
   partition-parallel for 100 TB scale.
 """
 
-from kaj_query_engine_spark.engine import KajEngine
-from kaj_query_engine_spark.session import get_spark
-from kaj_query_engine_spark.sources.versioned import VersionedTable
+# The public names load on first use (PEP 562), so importing the
+# package imports no pyspark: ``python -m
+# kaj_query_engine_spark.worker_daemon`` must settle ``sys.path``
+# before pyspark is first imported.
+_EXPORTS = {
+    "KajEngine": "kaj_query_engine_spark.engine",
+    "VersionedTable": "kaj_query_engine_spark.sources.versioned",
+    "get_spark": "kaj_query_engine_spark.session",
+}
 
 __all__ = ["KajEngine", "VersionedTable", "get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    from importlib import import_module
+
+    value = getattr(import_module(_EXPORTS[name]), name)
+    globals()[name] = value
+    return value

@@ -56,8 +56,9 @@ from pyspark.sql import functions as F
 
 DIGEST_BYTES = 32  # sha256 block
 # partition floor for the PNG generator's compute spread — see
-# attach_png_media: python-worker startup dominates past ~8 workers
-# per host JVM, and real inputs have more splits than this anyway
+# attach_png_media: per-task Python-worker overhead dominated past ~8
+# partitions per host JVM, and real inputs have more splits than this
+# anyway
 PNG_SPREAD = 8
 
 
@@ -193,10 +194,16 @@ def attach_png_media(
     # q40): a few-MB fixture arrives as one split and would serialize
     # every PNG encode on a single core. The spread is capped at
     # PNG_SPREAD=8, NOT defaultParallelism: every partition of every
-    # downstream mapInPandas stage spawns an Arrow python worker, and
-    # a fresh-session sweep measured cold 11/46/96 s at 8/16/32
-    # partitions (worker interpreter+Arrow startup dwarfs the codec
-    # work) against warm 2.6/5.1/… — 8 is the knee. At 100 TB the
+    # downstream mapInPandas stage is one Python-worker task, and a
+    # fresh-session sweep measured cold 11/46/96 s at 8/16/32
+    # partitions against warm 2.6/5.1/… — 8 is the knee. The per-task
+    # cost that dwarfed the codec work was not interpreter start-up
+    # (workers fork from a daemon and are reused) but the re-read of
+    # Spark's pyspark.zip, py4j zip and jar directories forced by the
+    # importlib.invalidate_caches() before each task (CPython 3.11
+    # zipimporter); get_spark's worker daemon (worker_daemon.py) drops
+    # those archives on local masters, and the knee has not been
+    # re-measured since. At 100 TB the
     # input has more splits than this floor and the repartition is a
     # cheap id shuffle whose count the inputFiles() max takes over.
     base = df.select(id_col)
@@ -535,7 +542,8 @@ def frame_sample(
 # --- audio: real WAV/PCM codec path (functions/wav.py) ---------------
 
 # partition floor for the WAV generator, same sweep-measured rationale
-# as PNG_SPREAD (python-worker startup dominates past ~8 per host JVM)
+# as PNG_SPREAD (per-task Python-worker overhead dominates past ~8 per
+# host JVM)
 WAV_SPREAD = 8
 _WAV_BLOCK = DIGEST_BYTES // 2  # int16 samples per sha256 digest
 

@@ -26,9 +26,19 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-_VENDORED_PROTOBUF = (
-    Path(__file__).resolve().parent.parent / "third_party" / "protobuf"
-)
+_PACKAGE_ROOT = Path(__file__).resolve().parent.parent
+_VENDORED_PROTOBUF = _PACKAGE_ROOT / "third_party" / "protobuf"
+
+
+def _export_pythonpath(entry: str, first: bool = False) -> None:
+    """Add ``entry`` to this process's PYTHONPATH (at the front when
+    ``first``) unless it is already there. Python workers inherit the
+    JVM's environment, captured at gateway launch."""
+    prior = os.environ.get("PYTHONPATH")
+    parts = prior.split(os.pathsep) if prior else []
+    if entry not in parts:
+        parts = [entry, *parts] if first else [*parts, entry]
+        os.environ["PYTHONPATH"] = os.pathsep.join(parts)
 
 
 def _export_vendored_protobuf():
@@ -59,15 +69,9 @@ def _export_vendored_protobuf():
         return False  # a real install exists; never shadow it
     except ImportError:
         pass
-    vendor = str(_VENDORED_PROTOBUF)
     if not (_VENDORED_PROTOBUF / "google" / "protobuf").is_dir():
         return False
-    prior = os.environ.get("PYTHONPATH")
-    if vendor in (prior or "").split(os.pathsep):
-        return True  # already exported (e.g. by a wrapper script)
-    os.environ["PYTHONPATH"] = (
-        f"{prior}{os.pathsep}{vendor}" if prior else vendor
-    )
+    _export_pythonpath(str(_VENDORED_PROTOBUF))
     return True
 
 
@@ -90,6 +94,10 @@ def get_spark(
         shuffle_partitions = cpus
 
     vendor_exported = _export_vendored_protobuf()
+    # the workers import this package (the codec and streaming UDFs,
+    # the worker daemon below) from where the driver imported it, not
+    # from whatever the driver's cwd happens to be
+    _export_pythonpath(str(_PACKAGE_ROOT), first=True)
     pre_existing = SparkSession.getActiveSession()
 
     builder = (
@@ -121,12 +129,18 @@ def get_spark(
         # groups of the fact table that a BHJ threshold can't touch
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     )
-    if vendor_exported:
-        # cluster-mode executors don't inherit the driver process env:
-        # ship the vendored dir to them explicitly (harmless no-op in
-        # local mode, where workers fork from the driver-env JVM)
+    # cluster-mode executors don't inherit the driver process env, and
+    # a local gateway launched before this call captured an older one:
+    # ship the exported PYTHONPATH to the workers explicitly
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
+    )
+    if master == "local" or master.startswith("local["):
+        # workers import the installed pyspark instead of Spark's zip
+        # (see worker_daemon.py); local only, where the package root
+        # exported above is on the daemon's path for certain
         builder = builder.config(
-            "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
+            "spark.python.daemon.module", "kaj_query_engine_spark.worker_daemon"
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

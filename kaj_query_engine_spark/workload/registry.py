@@ -76,7 +76,10 @@ def register(
 # label sum; build_training_corpus checkpoints its stages) and the
 # shared spread_by_id helper. The first eight are the queries whose
 # code path moved; the rest are pinned by module-level import edits
-# in operators/dedup.py and operators/pipeline.py.
+# in operators/dedup.py and operators/pipeline.py. The last two are
+# pinned by the PNG_SPREAD comment rewrite in operators/multimodal.py
+# (attach_png_media); their codec UDFs also now run in workers that
+# import the installed pyspark (worker_daemon.py).
 _CHANGED_THIS_ROUND = [
     "q54_dedup_clusters",  # cluster_duplicates
     "q40_text_stats",  # spread_by_id replaces pipeline._spread
@@ -93,13 +96,15 @@ _CHANGED_THIS_ROUND = [
     "q50_dedup_exact",
     "q69_span_decontaminate",
     "q82_stream_dedup",
+    "q90_media_pipeline",
+    "q93_codec_decode",
 ]
 
 # Stalest-first (RULE 2): the 31 queries OUTSIDE round 15's 50-query
 # window (their last external correctness row is round 14), in
 # registration order.
-# 15 changed + 31 stale − overlap (11) = 35 window slots; the other
-# 15 fall to registration order (all_queries appends the rest).
+# 17 changed + 31 stale − overlap (12) = 36 window slots; the other
+# 14 fall to registration order (all_queries appends the rest).
 _STALEST = [
     "q20_set_ops",
     "q46_profile_topk",

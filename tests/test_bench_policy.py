@@ -11,7 +11,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import canary_decide, host_factor_for  # noqa: E402
+from bench import _cpu_counters, canary_decide, host_factor_for  # noqa: E402
 
 
 def test_median_over_unchanged_queries():
@@ -149,3 +149,16 @@ def test_canary_third_explained_red_repins_to_best_probe():
     )
     assert v["explained"] and v["explained_streak"] == 0
     assert v["new_ref"] == 5.6  # the best probe, not the slot
+
+
+def test_cpu_counters_total_excludes_guest_time(tmp_path):
+    """The aggregate cpu line is user nice system idle iowait irq
+    softirq steal guest guest_nice; the kernel already counts guest
+    and guest_nice inside user and nice, so the total stops at steal."""
+    stat = tmp_path / "stat"
+    stat.write_text(
+        "cpu  100 20 30 400 5 6 7 8 50 10\n"
+        "cpu0 25 5 7 100 1 1 2 2 12 3\n"
+    )
+    assert _cpu_counters(str(stat)) == (8, 576)
+    assert _cpu_counters(str(tmp_path / "missing")) is None

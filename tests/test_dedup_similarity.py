@@ -1230,6 +1230,41 @@ def test_semantic_dedup_planted_duplicates(spark):
     assert all(r.n >= r.dropped for r in loose)
 
 
+def test_semantic_dedup_skips_sizing_probe_without_broadcast(spark, monkeypatch):
+    """With broadcasts disabled the pair join's sizing probe (an eager
+    job) is skipped. Both measured runs plan under
+    autoBroadcastJoinThreshold=-1; the first sees a 1-byte threshold in
+    ``semantic_dedup`` only, so it probes and still cannot broadcast:
+    more jobs, the same rows."""
+    rows = [
+        (i, [0.4 * (i % 2) + 0.01 * (i % 5), 0.3, 0.01 * i, -0.2])
+        for i in range(16)
+    ] + [(100, [0.01, 0.3, 0.0, -0.2])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+
+    def run():
+        return count_jobs(spark, lambda: sorted(D.semantic_dedup(
+            df, "vec_id", "embedding", k=2, iterations=2,
+            thr_num=999, thr_den=1000,
+        ).collect()))
+
+    spark.conf.set(key, "-1")
+    try:
+        run()  # warm-up: both measured runs then read the same caches
+        with monkeypatch.context() as mp:
+            mp.setattr(D, "_auto_broadcast_bytes", lambda _spark: 1)
+            probed, probed_jobs = run()
+        skipped, skipped_jobs = run()
+    finally:
+        spark.conf.set(key, prior)
+    assert skipped == probed and sum(r.dropped for r in skipped) >= 1
+    # the probe is one aggregate query, which AQE runs as two jobs:
+    # its shuffle-map stage, then the result stage
+    assert probed_jobs - skipped_jobs == 2, (probed_jobs, skipped_jobs)
+
+
 def test_semantic_dedup_injected_assignment_and_pair_cap(spark):
     """Round-12 deployment knobs: (a) a precomputed (id, j) assignment
     injected via ``assigned=`` reproduces the in-line clustering path

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 import time
 from pathlib import Path
@@ -101,23 +102,32 @@ def normalize(pdf):
     return cols, body
 
 
+def _cores() -> int:
+    """Cores for the local master: ``SPARK_GRAFT_CPUS`` when set,
+    else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def main():
     args = [a for a in sys.argv[1:] if a != "--vanilla"]
     vanilla = "--vanilla" in sys.argv[1:]
     sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
     name_filter = args[1] if len(args) > 1 else ""
+    cores = _cores()
     if vanilla:
         from pyspark.sql import SparkSession
 
         spark = (
             SparkSession.builder.appName("check-correctness-vanilla")
-            .master("local[8]")
+            .master(f"local[{cores}]")
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )
     else:
         spark = get_spark(
-            "check-correctness", master="local[8]", shuffle_partitions=8
+            "check-correctness", master=f"local[{cores}]",
+            shuffle_partitions=cores,
         )
     con = duckdb.connect()
     for t in TABLES:
